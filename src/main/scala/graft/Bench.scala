@@ -45,7 +45,7 @@ object Bench {
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-bench-local" else "/tmp")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // object-hash aggs (grid_burn, collect_capped, keep_smallest) stay hash-based
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -58,7 +58,7 @@ object Bench {
       .persist()
     val nPoints = points.count() // materialize once; excluded from timings
 
-    // 1) tiling throughput: salted two-phase groupBy + clip + MVT encode @ z=8
+    // 1) tiling throughput: clip + fragment encode, one tile exchange, MVT encode @ z=8
     val (tileStats, tileSec) = timedWarm {
       val tiles = vps.tiling.TilePipeline.tileZoom(points, 8)
       tiles.agg(count(lit(1)), sum(col("features"))).head()

@@ -49,7 +49,7 @@ object SparkEntry {
     InterleavedDocs.geoSpansDirect(spark, dir)
   }
 
-  /** Flagship: spans -> geometry -> salted tile groupBy -> clip -> MVT encode,
+  /** Flagship: spans -> geometry -> clip + fragment encode -> tile exchange -> MVT encode,
     * on sf0.001; driver smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {

@@ -12,7 +12,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // object-hash aggs (grid_burn, collect_capped, keep_smallest) stay hash-based
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

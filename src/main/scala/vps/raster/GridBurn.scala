@@ -15,7 +15,7 @@ import vps.geom.{TileMath, Wkb}
   * addition. A hot tile (10^8 points in one key) costs each map partition one
   * grid instead of flooding a single reducer with every point row — grids are
   * a genuinely REDUCING aggregate, unlike the MVT feature pack where
-  * collect-style aggregation was measured to lose (see TilePipeline notes).
+  * collect-style aggregation was measured to lose (BENCH/BASELINE.md).
   *
   * Serialization is sparse-aware: a partial grid with fewer than
   * `resolution^2 / 8` nonzero cells ships as (index, value) pairs, so SPARSE

@@ -927,38 +927,14 @@ object functions {
   def st_simplify(g: Column, tolerance: Column, preserveTopology: Boolean = true): Column =
     c(StSimplify(ex(g), ex(tolerance), ex(lit(preserveTopology))))
 
-  /** Register SQL names so `spark.sql("SELECT st_point(...)")` works. */
+  /** Register SQL names so `spark.sql("SELECT st_point(...)")` works: the
+    * same [[FunctionTable]] that [[VpsExtensions]] injects.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def r(name: String, f: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, f, "scala_udf")
-    r("st_point", e => StPoint(e(0), e(1)))
-    r("st_geomfromwkt", e => StGeomFromWkt(e(0)))
-    r("st_astext", e => StAsText(e(0)))
-    r("st_x", e => StX(e(0)))
-    r("st_y", e => StY(e(0)))
-    r("st_area", e => StArea(e(0)))
-    r("st_makevalid", e => StMakeValid(e(0)))
-    r("st_buffer", e => StBuffer(e(0), e(1)))
-    r("st_convexhull", e => StConvexHull(e(0)))
-    r("st_numgeometries", e => StNumGeometries(e(0)))
-    r("st_isvalid", e => StIsValid(e(0)))
-    r("st_union_agg", e => StUnionAgg(e(0)).toAggregateExpression())
-    r("st_envelope", e => StEnvelope(e(0)))
-    r("st_boundary", e => StBoundary(e(0)))
-    r("st_intersection", e => StIntersection(e(0), e(1)))
-    r("st_union", e => StUnion(e(0), e(1)))
-    r("st_difference", e => StDifference(e(0), e(1)))
-    r("st_symdifference", e => StSymDifference(e(0), e(1)))
-    r("st_contains", e => StContains(e(0), e(1)))
-    r("st_intersects", e => StIntersects(e(0), e(1)))
-    r("st_distance", e => StDistance(e(0), e(1)))
-    r("tile_x", e => TileXOf(e(0), e(1)))
-    r("tile_y", e => TileYOf(e(0), e(1)))
-    r("cell_at", e => CellAt(e(0), e(1), e(2)))
-    r("cell_kring", e => CellKRing(e(0), e(1)))
-    r("tile_keys", e => TileKeysOf(e(0), e(1)))
-    r("st_reproject", e => StReproject(e(0), e(1), e(2)))
+    FunctionTable.builders.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }
 

@@ -2,7 +2,7 @@ package vps.sql
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point — the idiomatic deployment surface:
   *
@@ -12,68 +12,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * injects the engine's SQL functions into every session built from that
   * context (no imperative `functions.register(spark)` call needed), and
-  * registers the geometry UDT. Function set mirrors
-  * [[vps.sql.functions.register]].
+  * registers the geometry UDT. Injects the same [[FunctionTable]] that
+  * [[vps.sql.functions.register]] installs.
   */
 class VpsExtensions extends (SparkSessionExtensions => Unit) {
-  import vps.text.{ArrayPairs, CharShingles, CollectCapped, CosineSim, DocFingerprint, HashUniform, LangId, MinHashBands, NgramJaccard, SimHash64}
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     vps.geom.Geo.registerUDTs()
-    def inject(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo("vps", name), builder))
-    inject("st_point", e => StPoint(e(0), e(1)))
-    inject("st_geomfromwkt", e => StGeomFromWkt(e(0)))
-    inject("st_astext", e => StAsText(e(0)))
-    inject("st_x", e => StX(e(0)))
-    inject("st_y", e => StY(e(0)))
-    inject("st_area", e => StArea(e(0)))
-    inject("st_length", e => StLength(e(0)))
-    inject("st_centroid", e => StCentroid(e(0)))
-    inject("st_isempty", e => StIsEmpty(e(0)))
-    inject("st_makevalid", e => StMakeValid(e(0)))
-    inject("st_buffer", e => StBuffer(e(0), e(1)))
-    inject("st_convexhull", e => StConvexHull(e(0)))
-    inject("st_numgeometries", e => StNumGeometries(e(0)))
-    inject("st_isvalid", e => StIsValid(e(0)))
-    inject("st_union_agg", e => StUnionAgg(e(0)).toAggregateExpression())
-    inject("st_contains", e => StContains(e(0), e(1)))
-    inject("st_intersects", e => StIntersects(e(0), e(1)))
-    inject("st_within", e => StWithin(e(0), e(1)))
-    inject("st_distance", e => StDistance(e(0), e(1)))
-    inject("st_simplify", e => StSimplify(e(0), e(1), e(2)))
-    inject("st_cliptotile", e => StClipToTile(e(0), e(1), e(2), e(3)))
-    inject("st_reproject", e => StReproject(e(0), e(1), e(2)))
-    inject("tile_x", e => TileXOf(e(0), e(1)))
-    inject("tile_y", e => TileYOf(e(0), e(1)))
-    inject("cell_at", e => CellAt(e(0), e(1), e(2)))
-    inject("cell_parent", e => CellParent(e(0), e(1)))
-    inject("cell_kring", e => CellKRing(e(0), e(1)))
-    inject("tile_keys", e => TileKeysOf(e(0), e(1)))
-    inject("parent_tile_keys", e => ParentTileKeys(e(0)))
-    inject("cells_of", e => CellsOf(e(0), e(1)))
-    inject("minhash_bands", e => MinHashBands(e(0), e(1), e(2), e(3)))
-    inject("simhash64", e => SimHash64(e(0)))
-    inject("ngram_jaccard", e => NgramJaccard(e(0), e(1), e(2)))
-    inject("doc_fingerprint", e => DocFingerprint(e(0)))
-    inject("lang_id", e => LangId(e(0)))
-    inject("cosine_sim", e => CosineSim(e(0), e(1)))
-    inject("hash_uniform", e => HashUniform(e(0), e(1)))
-    inject("char_shingles", e => CharShingles(e(0), e(1)))
-    inject("array_pairs", e => ArrayPairs(e(0)))
-    // bounded collect_list (cap must be a foldable integer literal)
-    inject("collect_capped", e => {
-      // guard BEFORE eval: a column-reference cap would otherwise die inside
-      // eval(InternalRow.empty) with an unhelpful unresolved/NPE-style error
-      if (!e(1).foldable) throw new IllegalArgumentException(
-        s"collect_capped: cap must be a foldable integer literal, got ${e(1).sql}")
-      val cap = e(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-        case n: Number => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"collect_capped: cap must be a foldable integer literal, got $other")
-      }
-      CollectCapped(e(0), cap).toAggregateExpression()
-    })
+    FunctionTable.builders.foreach { case (name, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo("vps", name), builder))
+    }
   }
 }

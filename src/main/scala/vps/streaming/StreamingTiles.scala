@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import vps.tiling.{TilePipeline, TileSink}
 
 /** End-to-end streaming tiling: the interleaved-docs micro-batch stream ->
-  * span extraction -> salted tile aggregation -> MVT bytes -> lineage-committed
+  * span extraction -> tile aggregation -> MVT bytes -> lineage-committed
   * file sink, one tile tree per micro-batch (`<out>/batch-<id>/z/x/y.mvt`).
   *
   * Exactly-once story: offsets ride the engine checkpoint; a replayed batch

@@ -8,18 +8,12 @@ import org.apache.spark.sql.functions._
   * round), reading a pre-materialized corpus from tmpfs parquet so every leg
   * scans identical input. Reports per-round efficiency and the median.
   *
-  * Usage: runMain vps.tools.AltTilesProbe [replication] [rounds] [strategy]
-  *   strategy: single | sort | hash (default single)
+  * Usage: runMain vps.tools.AltTilesProbe [replication] [rounds]
   */
 object AltTilesProbe {
   def main(args: Array[String]): Unit = {
     val rep = args.headOption.map(_.toInt).getOrElse(10000)
     val rounds = args.lift(1).map(_.toInt).getOrElse(3)
-    val strategy = args.lift(2).getOrElse("single") match {
-      case "sort" => vps.tiling.TilePipeline.PackStrategy.SaltedSort
-      case "hash" => vps.tiling.TilePipeline.PackStrategy.SaltedHash
-      case _ => vps.tiling.TilePipeline.PackStrategy.SinglePhase
-    }
     val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val corpus = s"$base/vps_alt_corpus_$rep"
 
@@ -51,9 +45,7 @@ object AltTilesProbe {
       points.count()
       def run(): Double = {
         val t0 = System.nanoTime()
-        vps.tiling.TilePipeline.tileZoom(points, 8,
-          vps.tiling.TilePipeline.Options(strategy = strategy))
-          .toDF().agg(count(lit(1))).head()
+        vps.tiling.TilePipeline.tileZoom(points, 8).toDF().agg(count(lit(1))).head()
         (System.nanoTime() - t0) / 1e9
       }
       val t = run()
@@ -73,7 +65,7 @@ object AltTilesProbe {
     }
     val los = effs.map(_._1).sorted; val his = effs.map(_._2).sorted
     val es = effs.map(_._3).sorted
-    println(f"strategy=$strategy rep=$rep rounds=$rounds: " +
+    println(f"rep=$rep rounds=$rounds: " +
       f"local[4] best=${los.head}%.1f median=${los(los.length / 2)}%.1f | " +
       f"local[16] best=${his.head}%.1f median=${his(his.length / 2)}%.1f | " +
       f"efficiency median=${es(es.length / 2)}%.2f best-pair=${los.head / his.head / 4}%.2f")

@@ -19,7 +19,7 @@ object Demo {
       .appName("vps-demo")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // object-hash aggs (grid_burn, collect_capped, keep_smallest) stay hash-based
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

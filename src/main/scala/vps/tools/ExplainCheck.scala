@@ -16,7 +16,7 @@ object ExplainCheck {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // object-hash aggs (grid_burn, collect_capped, keep_smallest) stay hash-based
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -69,17 +69,7 @@ object ExplainCheck {
       .groupBy("l_returnflag").agg(sum("l_quantity"))
     audit("partial agg", partial, Seq("HashAggregate", "Exchange"))
 
-    // 6) single-phase tiling: exactly ONE exchange in the whole plan (the
-    // fused fragment generator runs map-side; tile encode in the reducer)
-    val tilesDf = vps.tiling.TilePipeline.tileZoom(
-      pts.select((col("id")).as("id"), col("geom")), 6).toDF()
-    tilesDf.collect()
-    // final AQE plan only (the executed-plan string appends "== Initial Plan ==")
-    val tilePlan = tilesDf.queryExecution.executedPlan.toString.split("Initial Plan")(0)
-    val nHash = "Exchange hashpartitioning".r.findAllIn(tilePlan).length
-    println(s"\n========== single-phase tiling exchange count ==========")
-    println(s"[check] ${if (nHash == 1) "PASS" else s"MISS ($nHash)"}: " +
-      "exactly one hash Exchange (the tile key; corpus-synthesis round-robin spread excluded)")
+    // 6) the single-exchange tile plan is asserted in TilePipelineSpec
 
     // 7) rasterize: the exchange carries partial GRIDS (gridburn partial
     // aggregation appears BELOW the exchange), and there is exactly one

@@ -21,7 +21,7 @@ object PyramidBench {
       .config("spark.sql.shuffle.partitions", cpus * 2)
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-pyr-local" else "/tmp")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // object-hash aggs (grid_burn, collect_capped, keep_smallest) stay hash-based
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = vps.docs.InterleavedDocs.fromDocuments(spark, dir, replication)

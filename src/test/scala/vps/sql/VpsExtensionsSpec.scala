@@ -52,4 +52,40 @@ class VpsExtensionsSpec extends AnyFunSuite {
       SparkSession.setActiveSession(shared)
     }
   }
+
+  test("functions.register and VpsExtensions expose the same SQL function set") {
+    val shared = SparkTestSession.spark
+    def names(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    // newSession() starts from the builtin registry, without temp functions
+    val builtin = names(shared.newSession())
+    val registered = shared.newSession()
+    functions.register(registered)
+    val viaRegister = names(registered) -- builtin
+
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new VpsExtensions())
+      .getOrCreate()
+    try {
+      val viaExtensions = names(ext) -- builtin
+      assert(viaRegister === viaExtensions)
+      assert(viaRegister === FunctionTable.builders.map(_._1).toSet)
+      assert(viaRegister.size === 46)
+      // one name from each side the two paths used to disagree on, through both
+      Seq(registered, ext).foreach { s =>
+        val row = s.sql(
+          """SELECT st_length(st_geomfromwkt('LINESTRING (0 0, 3 4)')) AS len,
+            |       st_astext(st_envelope(st_geomfromwkt('LINESTRING (0 0, 3 4)'))) AS env
+            |""".stripMargin).head()
+        assert(row.getDouble(0) === 5.0)
+        assert(row.getString(1) === "POLYGON ((0 0, 0 4, 3 4, 3 0, 0 0))")
+      }
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
 }

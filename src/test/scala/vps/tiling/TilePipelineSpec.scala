@@ -37,12 +37,29 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(decoded.layers.head.version === 2)
   }
 
-  test("tile bytes are deterministic across runs and salt settings") {
-    val a = TilePipeline.tileZoom(geoms, 5).collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-    val b = TilePipeline.tileZoom(geoms.repartition(7), 5, TilePipeline.Options(saltBuckets = 3))
+  test("tile bytes are deterministic across runs") {
+    // the polygon crosses tile boundaries, so its fragments travel from
+    // several map-side clips into different tiles
+    val poly = Seq((424242L, "POLYGON ((-10 -10, 10 -10, 10 10, -10 10, -10 -10))"))
+      .toDF("id", "wkt").select($"id", st_geomFromWKT($"wkt").as("geom"))
+    val input = geoms.unionByName(poly)
+    val a = TilePipeline.tileZoom(input, 5).collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
+    val b = TilePipeline.tileZoom(input.repartition(7), 5)
       .collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
     assert(a.keySet === b.keySet)
     a.foreach { case (k, bytes) => assert(b(k) === bytes, s"tile $k differs") }
+  }
+
+  test("tileZoom plans exactly one exchange, keyed by tile") {
+    val pts = spark.range(0, 2000).toDF("id")
+      .select($"id", st_point(($"id" % 360).cast("double") - 180.0,
+        ($"id" % 170).cast("double") - 85.0).as("geom"))
+    val tiles = TilePipeline.tileZoom(pts, 6).toDF()
+    tiles.collect()
+    // final AQE plan only (the executed-plan string appends "== Initial Plan ==")
+    val plan = tiles.queryExecution.executedPlan.toString.split("Initial Plan")(0)
+    assert("Exchange".r.findAllIn(plan).length === 1, plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
   }
 
   test("polygon clipped across tiles: fragments land in each tile, within extent") {
@@ -70,37 +87,18 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(counts(2)._1 <= counts(3)._1 && counts(3)._1 <= counts(4)._1)
   }
 
-  test("all pack strategies produce byte-identical tiles") {
-    val poly = Seq((424242L, "POLYGON ((-10 -10, 10 -10, 10 10, -10 10, -10 -10))"))
-      .toDF("id", "wkt").select($"id", st_geomFromWKT($"wkt").as("geom"))
-    val input = geoms.unionByName(poly)
-    val fused = TilePipeline.tileZoom(input, 5).collect() // SinglePhase default
-      .map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-    Seq(TilePipeline.PackStrategy.WkbPhase1, TilePipeline.PackStrategy.SaltedSort,
-      TilePipeline.PackStrategy.SaltedHash).foreach { strat =>
-      val alt = TilePipeline.tileZoom(input, 5, TilePipeline.Options(strategy = strat))
-        .collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-      assert(alt.keySet === fused.keySet, s"$strat key set")
-      fused.foreach { case (k, bytes) => assert(alt(k) === bytes, s"tile $k differs ($strat)") }
-    }
-  }
-
-  test("pathological hot tile: 50k features on ONE tile key encode correctly under every strategy") {
+  test("pathological hot tile: 50k features on ONE tile key encode correctly") {
     val n = 50000
     // a dense grid inside one z2 tile
     val pts = spark.range(0, n).toDF("id")
       .select($"id", st_point(
         lit(10.0) + ($"id" % 250).cast("double") * 0.0001,
         lit(10.0) + ($"id" / 250).cast("double") * 0.0001).as("geom"))
-    Seq(TilePipeline.PackStrategy.SinglePhase, TilePipeline.PackStrategy.SaltedSort)
-      .foreach { strat =>
-        val tiles = TilePipeline.tileZoom(pts, 2,
-          TilePipeline.Options(strategy = strat)).collect()
-        assert(tiles.length === 1, s"$strat: all features must land on one tile")
-        assert(tiles.head.features === n, s"$strat")
-        val decoded = Mvt.decode(tiles.head.mvt)
-        assert(decoded.layers.head.features.size === n, s"$strat decode")
-      }
+    val tiles = TilePipeline.tileZoom(pts, 2).collect()
+    assert(tiles.length === 1, "all features must land on one tile")
+    assert(tiles.head.features === n)
+    val decoded = Mvt.decode(tiles.head.mvt)
+    assert(decoded.layers.head.features.size === n)
   }
 
   test("multi-layer tiles: features split into named layers by a string column") {
